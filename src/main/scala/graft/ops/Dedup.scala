@@ -288,20 +288,23 @@ object Dedup {
     * O(log diameter), which matters on chain-shaped near-dup graphs
     * (embedding chains at a loose threshold), not just dense clusters.
     * Every step is a distributed join/aggregate; the driver loop only
-    * reads the converged flag.
+    * reads the converged flag, which the round's own checkpoint job
+    * records ([[Rounds.NoneChanged]]: no label shrank) — one job per
+    * round instead of a second count() pass over the state (the r21
+    * scaling block showed the whole CC family driver-round-bound,
+    * 8v32 ratios 0.28-0.78).
     *
-    * `roundPartitions` (or the [[Rounds.PartitionsKey]] session conf)
-    * sizes the per-round label exchange and the checkpointed state —
-    * the 1000× lever: ~128 MB per partition of round state. Default
-    * None = current behavior (`spark.sql.shuffle.partitions`). When
-    * set, the cached edge frame is also pre-partitioned on its join
-    * key, so the edge side of every round's join exchanges once at
-    * cache time instead of per round. Labels are exact longs — the
-    * result is identical under any partitioning.
+    * The [[Rounds.PartitionsKey]] session conf sizes the per-round
+    * label exchange and the checkpointed state — the 1000× lever:
+    * ~128 MB per partition of round state. Unset = current behavior
+    * (`spark.sql.shuffle.partitions`). When set, the cached edge frame
+    * is also pre-partitioned on its join key, so the edge side of every
+    * round's join exchanges once at cache time instead of per round.
+    * Labels are exact longs — the result is identical under any
+    * partitioning.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      roundPartitions: Option[Int] = None): DataFrame =
-    connectedComponentsFrom(pairs, None, maxIter, roundPartitions)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponentsFrom(pairs, None, maxIter)
 
   /** [[connectedComponents]] with an optional SEED labeling: nodes
     * present in `seed` (id, component) start from their seeded label
@@ -317,9 +320,8 @@ object Dedup {
     * consuming the first propagation round of every fold (r22, VERDICT
     * item 1 — q304's three chained folds). */
   private[graft] def connectedComponentsFrom(pairs: DataFrame,
-      seed: Option[DataFrame], maxIter: Int = 25,
-      roundPartitions: Option[Int] = None): DataFrame = {
-    val rp = Rounds.resolve(pairs.sparkSession, roundPartitions)
+      seed: Option[DataFrame], maxIter: Int = 25): DataFrame = {
+    val rp = Rounds.resolve(pairs.sparkSession)
     // symmetrize in ONE pass over `pairs`: the union-of-two-selects form
     // evaluates the (potentially expensive — q46/q83 feed the whole
     // inverted-index jaccard join in here) pair plan twice when the cache
@@ -343,14 +345,6 @@ object Dedup {
     val edges = rp.map(p => sym.repartition(p, col("b")))
       .getOrElse(sym)
       .cache()
-    // localCheckpoint (eager) after every round: an iterative frame's
-    // logical plan otherwise nests all previous rounds — analysis cost
-    // and driver memory grow superlinearly with the iteration count, and
-    // any recompute cascades through the whole chain. Checkpointing
-    // truncates the lineage to the materialized blocks. Superseded
-    // checkpoints (one small label frame per round) are reclaimed by the
-    // ContextCleaner once unreferenced; the within-round `stepped` frame
-    // uses an ordinary cache and is dropped explicitly.
     val initial = seed match {
       case None =>
         edges.select(col("a").as("id")).distinct()
@@ -364,57 +358,33 @@ object Dedup {
           .join(st.select(col("id"), col("component").as("seed_c")), Seq("id"), "left")
           .select(col("id"), coalesce(col("seed_c"), col("id")).as("component"))
     }
-    var labels = Rounds.shape(initial, col("id"), rp)
-      .localCheckpoint()
-    val spark = pairs.sparkSession
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // convergence is detected DURING the checkpoint materialization:
-      // a side-effecting marker on the final projection records whether
-      // any label shrank this round, so the loop runs ONE job per round
-      // instead of two (the r21 scaling block showed the whole CC family
-      // driver-round-bound — 8v32 ratios 0.28-0.78 — and the count() job
-      // was a second full pass over the corpus-sized state per round).
-      // The decision only needs changed == 0 vs > 0, which accumulators
-      // answer reliably in every stage position: successful-task updates
-      // are never dropped, and retry double-counting can only inflate a
-      // positive count, never fabricate one. Dropping `prev` from the
-      // checkpointed state also narrows the per-round materialized
-      // frame from (id, prev, component) to (id, component).
-      val acc = spark.sparkContext.longAccumulator("graft.cc.changed")
-      // nondeterministic so the optimizer never duplicates, reorders, or
-      // constant-folds the side effect (guide §4.4's duplication hazard)
-      val mark = udf((c: java.lang.Long, p: java.lang.Long) => {
-        if (c != null && p != null && c.longValue < p.longValue) acc.add(1L)
-        c
-      }).asNondeterministic()
+    // the within-round `stepped` frame uses an ordinary cache, dropped
+    // once the round that read it has been checkpointed
+    var stepped: Option[DataFrame] = None
+    val labels = Rounds.iterate(Rounds.shape(initial).localCheckpoint(), maxIter,
+        until = Some(Rounds.NoneChanged(col("component") < col("prev")))) { labels =>
+      stepped.foreach(_.unpersist())
       val neighborMin = edges
         .join(labels.select(col("id"), col("component")), col("b") === col("id"))
         .groupBy(col("a")).agg(min(col("component")).as("nbr_min"))
-      val stepped = labels
+      val st = labels
         .join(neighborMin, col("id") === col("a"), "left")
         .select(col("id"), col("component").as("prev"),
           least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"))
-        .cache() // consumed twice by the jump join below; freed at round end
+        .cache() // consumed twice by the jump join below
+      stepped = Some(st)
       // pointer jump: follow the new label one hop (label(label(x))) —
       // labels only ever shrink, so the composed label is still a
       // reachable node and chains halve every round, turning O(diameter)
       // convergence into O(log diameter) on chain-shaped graphs
-      val next = Rounds.shape(stepped
-        .join(stepped.select(col("id").as("jid"), col("component").as("jcomp")),
+      st.join(st.select(col("id").as("jid"), col("component").as("jcomp")),
           col("component") === col("jid"), "left")
-        .select(col("id"),
-          mark(least(col("component"), coalesce(col("jcomp"), col("component"))),
-            col("prev")).as("component")),
-        col("id"), rp)
-        .localCheckpoint()
-      stepped.unpersist()
-      if (acc.value == 0L) converged = true else labels = next
-      iter += 1
+        .select(col("id"), col("prev"),
+          least(col("component"), coalesce(col("jcomp"), col("component"))).as("component"))
     }
+    stepped.foreach(_.unpersist())
     edges.unpersist()
-    labels.select(col("id"), col("component"))
+    labels
   }
 
   /** Incremental component maintenance: fold a NEW batch of pair edges

@@ -6,22 +6,17 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics beyond [[Dedup.connectedComponents]]:
-  * fixed-iteration PageRank (the canonical "importance over a directed
-  * graph" measure — public algorithm, Brin & Page 1998) with proper
-  * dangling-mass redistribution.
+  * PageRank (plain, weighted, personalized — Brin & Page 1998), label
+  * propagation, BFS distances and shortest-path trees, HITS, k-core,
+  * modularity and triangle counts.
   *
-  * Scale shape: every iteration is two node/edge-keyed shuffles — the
-  * rank/out-degree join and the inbound-contribution aggregate (map-side
-  * combined on the destination) — plus a SCALAR dangling-mass aggregate
-  * (one row; the only driver-visible value besides the node count). The
-  * ranks frame stays node-sized, edges edge-sized; nothing corpus-wide
-  * ever sits on the driver. Lineage is flattened with localCheckpoint
-  * every few rounds (the CC-loop discipline), so plan size and recompute
-  * cost are constant per iteration.
-  *
-  * Fixed iteration count rather than convergence detection keeps runs
-  * deterministic and oracle-replayable; production callers pick iters
-  * by the usual ~log(N) guidance or wrap this in a delta check.
+  * The iterative ops run on [[Rounds.iterate]], which materializes the
+  * round state every round by default (lineage cut, so plan size and
+  * recompute cost are constant per round) and sizes it by
+  * `spark.graft.round.partitions`. Their round counts are fixed
+  * parameters, which keeps runs deterministic and oracle-replayable;
+  * k-core and connected components additionally stop early once a
+  * round changes nothing, which leaves the output unchanged.
   */
 object Graph {
 
@@ -155,12 +150,38 @@ object Graph {
   }
 
   /** PageRank over directed edges (src, dst): returns (node, rank) for
-    * every node appearing as source or destination. Parallel edges are
-    * collapsed (simple-graph semantics). Dangling nodes (no out-edges)
-    * redistribute their mass uniformly each iteration, so total rank
-    * mass stays exactly 1 up to float addition. */
+    * every node appearing as source or destination. Dangling nodes (no
+    * out-edges) redistribute their mass over the teleport distribution
+    * each iteration, so total rank mass stays exactly 1 up to float
+    * addition.
+    *
+    * Three variants share this loop:
+    *  - plain (default): parallel edges are collapsed (simple-graph
+    *    semantics), contributions split 1/out-degree, teleport uniform;
+    *  - `weightCol = Some(w)`: contributions split ∝ edge weight —
+    *    rank(src)·w(src,dst)/Σ_d w(src,d) — the natural fit when edges
+    *    carry interaction counts (a user who mentioned an item 50 times
+    *    should push 50× the mass of a one-off). Duplicate (src, dst)
+    *    edges are weight-SUMMED (the multigraph reading); non-positive
+    *    and null weights are dropped (they would corrupt the out-mass
+    *    denominator — a zero-weight edge is "no edge", a negative one is
+    *    undefined), and nodes whose out-edges were all dropped dangle;
+    *  - `seeds = Some(df)` (personalized PageRank — Haveliwala 2002,
+    *    topic-sensitive): teleport and dangling mass go uniformly to a
+    *    one-column frame of seed node ids instead of everywhere, so
+    *    non-seed-reachable nodes decay to exactly 0. Seeds absent from
+    *    the graph are ignored (they could receive no inbound mass); none
+    *    present is an error. Seeds are query-sized, never corpus-sized —
+    *    the teleport column is one broadcast join.
+    *
+    * Scale shape: every iteration is two node/edge-keyed shuffles — the
+    * rank/out-degree join and the inbound-contribution aggregate (map-side
+    * combined on the destination) — plus a SCALAR dangling-mass aggregate
+    * (one row). The ranks frame stays node-sized, edges edge-sized;
+    * nothing corpus-wide ever sits on the driver. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
+      weightCol: Option[String] = None, seeds: Option[DataFrame] = None,
       checkpointEvery: Int = 1): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
@@ -173,179 +194,65 @@ object Graph {
     // contribution join exchanges edges ONCE here instead of every
     // round (guide §2.4: two operations keyed the same way share one
     // exchange).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).cache()
-    val nodes = e.select(col("src").as("node"))
+    val e = (weightCol match {
+      case None => edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
+      case Some(w) => edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), col(w).cast("double").as("w"))
+        .filter(col("w") > 0) // also drops null weights
+        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+    }).repartition(col("src")).cache()
+    val allNodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    // out-degree is STATIC across iterations, so it is joined into the
-    // node base ONCE here — the loop below used to join ranks⋈outdeg
-    // twice per round (a dangling anti-join plus the contribution
-    // join); carrying `deg` (null = dangling) in the rank state turns
-    // the dangling mass into a joinless columnar aggregate over the
-    // SAME multiset of ranks and drops both per-round node-sized joins.
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
+    val nodes = seeds.fold(allNodes)(sd => allNodes
+      .join(broadcast(sd.toDF("node").distinct().withColumn("is_seed", lit(true))),
+        Seq("node"), "left")
+      .cache())
+    // the teleport probability: 1/k on the k seeds present, 0 elsewhere
+    val tele = seeds.map { _ =>
+      val k = nodes.filter(col("is_seed")).count().toDouble
+      require(k > 0, "no seed appears in the graph")
+      when(col("is_seed"), lit(1.0 / k)).otherwise(lit(0.0)).as("tele")
+    }
+    // the out-mass denominator (out-degree, or out-weight sum) is STATIC,
+    // so it is joined into the node base ONCE here; carrying `deg` (null
+    // = dangling) in the rank state makes the dangling mass a joinless
+    // columnar aggregate, and the contribution needs no per-round
+    // rank⋈degree join
+    val outdeg = e.groupBy(col("src")).agg(
+      weightCol.fold(count(lit(1)).cast("double"))(_ => sum(col("w"))).as("deg"))
     val base = nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
-      .select(col("node"), col("deg"))
+      .select((col("node") +: tele.toSeq) :+ col("deg"): _*)
       .repartition(col("node")).cache()
-    // the graph's node count — a scalar, needed in the teleport term
-    val n = base.count().toDouble
-    var ranks = base.withColumn("rank", lit(1.0 / n))
-    var i = 1
-    while (i <= iters) {
-      // dangling mass: ranks of nodes with no out-edges (scalar agg —
-      // no join: deg is carried in the state, null marks dangling)
+    val (init, teleTerm, danglingShare) = seeds match {
+      case None =>
+        // the graph's node count — a scalar, needed in the teleport term
+        val n = base.count().toDouble
+        (base.withColumn("rank", lit(1.0 / n)), lit((1.0 - damping) / n), col("dsum") / n)
+      case Some(_) =>
+        (base.withColumn("rank", col("tele")), lit(1.0 - damping) * col("tele"),
+          col("dsum") * col("tele"))
+    }
+    val ranks = Rounds.iterate(init, iters, checkpointEvery) { ranks =>
+      // dangling mass: scalar agg, no join (null deg marks dangling)
       val dangling = ranks
         .agg(coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      // per-edge contribution rank(src)/deg(src), summed at the dst
-      val inbound = ranks.filter(col("deg").isNotNull)
-        .select(col("node").as("src"), (col("rank") / col("deg")).as("share"))
-        .join(e, "src")
-        .groupBy(col("dst").as("node"))
+      // per-edge contribution rank(src)·share(src, dst), summed at the dst
+      val live = ranks.filter(col("deg").isNotNull)
+      val contrib = weightCol match {
+        case None => live
+          .select(col("node").as("src"), (col("rank") / col("deg")).as("share"))
+          .join(e, "src")
+        case Some(_) => live
+          .select(col("node").as("src"), col("rank"), col("deg"))
+          .join(e, "src")
+          .select(col("dst"), (col("rank") * col("w") / col("deg")).as("share"))
+      }
+      val inbound = contrib.groupBy(col("dst").as("node"))
         .agg(sum(col("share")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
+      base.join(inbound, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
-        .select(col("node"), col("deg"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") / n)).as("rank"))
-      // materialize EVERY iteration by default: each round reads `ranks`
-      // TWICE (the dangling aggregate and the contribution join), so an
-      // un-materialized round doubles its predecessor's recompute — 2^k
-      // nesting by iteration k, the classic iterative-DataFrame trap
-      // (checkpointEvery > 1 is only for graphs where a lazy round is
-      // cheaper than a node-frame write)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
-    }
-    ranks.select(col("node"), col("rank"))
-  }
-
-  /** Edge-weighted PageRank: contributions split ∝ edge weight instead
-    * of 1/out-degree — rank(src)·w(src,dst)/Σ_d w(src,d) — the natural
-    * fit when edges carry interaction counts (a user who mentioned an
-    * item 50 times should push 50× the mass of a one-off). Duplicate
-    * (src, dst) edges are weight-SUMMED (the multigraph reading, unlike
-    * [[pageRank]]'s simple-graph distinct); non-positive and null
-    * weights are dropped (they would corrupt the out-mass denominator —
-    * a zero-weight edge is "no edge", a negative one is undefined).
-    * Nodes whose out-edges were all dropped become dangling and
-    * redistribute uniformly, exactly as unweighted dangling nodes do.
-    *
-    * Scale shape identical to [[pageRank]]: the weight-sum denominator
-    * replaces the degree count in the same node-sized cached frame; two
-    * keyed shuffles + one scalar aggregate per iteration. */
-  def weightedPageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      srcCol: String = "src", dstCol: String = "dst", weightCol: String = "weight",
-      checkpointEvery: Int = 1): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    // weight-summed edge frame, pre-partitioned on the per-round join
-    // key (src) so the contribution join exchanges edges once at cache
-    // time, not every round — same discipline as pageRank's edge cache
-    val e = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("w"))
-      .filter(col("w") > 0) // also drops null weights
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .repartition(col("src")).cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    // the out-mass denominator is STATIC — joined into the node base
-    // once (null wout = dangling) instead of twice per round (the
-    // anti-join + contribution join the unweighted form also dropped)
-    val outw = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val base = nodes.join(outw, nodes("node") === outw("src"), "left")
-      .select(col("node"), col("wout"))
-      .repartition(col("node")).cache()
-    val n = base.count().toDouble
-    var ranks = base.withColumn("rank", lit(1.0 / n))
-    var i = 1
-    while (i <= iters) {
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("wout").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      val inbound = ranks.filter(col("wout").isNotNull)
-        .select(col("node").as("src"), col("rank"), col("wout"))
-        .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") * col("w") / col("wout")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("wout"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") / n)).as("rank"))
-      // materialize every iteration: consumed twice per round (the 2^k
-      // recompute trap — see pageRank)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
-    }
-    ranks.select(col("node"), col("rank"))
-  }
-
-  /** Personalized PageRank: teleport mass goes to a SEED set instead of
-    * uniformly everywhere — the "related to these items" ranking
-    * (Haveliwala 2002, topic-sensitive PageRank; public algorithm).
-    * `seeds` is a one-column frame of node ids; teleport probability is
-    * uniform over the seeds present in the graph (seeds that never
-    * appear as an edge endpoint are ignored — they could receive no
-    * inbound mass anyway). Dangling mass also redistributes over the
-    * seed distribution, the standard personalized formulation, so total
-    * rank mass stays 1 and non-seed-reachable nodes decay to exactly 0.
-    *
-    * Scale shape is [[pageRank]]'s (two keyed shuffles + a scalar per
-    * iteration) plus one broadcast-sized left join building the
-    * per-node teleport column — seeds are query-sized, never
-    * corpus-sized. */
-  def personalizedPageRank(edges: DataFrame, iters: Int, seeds: DataFrame,
-      damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
-      checkpointEvery: Int = 1): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    // edge cache pre-partitioned on the per-round join key, as in
-    // pageRank
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).cache()
-    val sd = seeds.toDF("node").distinct()
-    // the node base carries BOTH static per-node columns: the teleport
-    // probability (1/k on seeds, 0 elsewhere) and the out-degree (null
-    // = dangling) — so the loop needs no per-round node-sized join
-    // beyond the final assembly (the same two-joins-per-round removal
-    // as pageRank)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(broadcast(sd.withColumn("is_seed", lit(true))), Seq("node"), "left")
-      .cache()
-    val k = nodes.filter(col("is_seed")).count().toDouble
-    require(k > 0, "no seed appears in the graph")
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg"))
-    val base = nodes
-      .join(outdeg, nodes("node") === outdeg("src"), "left")
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0 / k)).otherwise(lit(0.0)).as("tele"),
-        col("deg"))
-      .repartition(col("node")).cache()
-    var ranks = base.select(col("node"), col("tele"), col("deg"),
-      col("tele").as("rank"))
-    var i = 1
-    while (i <= iters) {
-      val dangling = ranks
-        .agg(coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0.0)).as("dsum"))
-      val inbound = ranks.filter(col("deg").isNotNull)
-        .select(col("node").as("src"), (col("rank") / col("deg")).as("share"))
-        .join(e, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("share")).as("in_sum"))
-      ranks = base.join(inbound, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("tele"), col("deg"),
-          (lit(1.0 - damping) * col("tele") + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dsum") * col("tele")))
-            .as("rank"))
-      // materialize every iteration: ranks is consumed twice per round
-      // (the 2^k recompute trap — see pageRank)
-      if (i % checkpointEvery == 0)
-        ranks = Rounds.shape(ranks, col("node")).localCheckpoint(eager = true)
-      i += 1
+        .select(base.columns.map(col) :+ (teleTerm + lit(damping) *
+          (coalesce(col("in_sum"), lit(0.0)) + danglingShare)).as("rank"): _*)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -367,10 +274,9 @@ object Graph {
     * and no sort, so a celebrity hub with millions of distinct
     * neighbor labels is reduced incrementally instead of materialized
     * and sorted inside one window partition (the straggler shape
-    * [[GroupTopK]]'s scaladoc warns about). Labels materialize every
-    * round (the same consumed-twice/lineage discipline as
-    * [[pageRank]]). Node ids must be long-typed (they double as
-    * labels inside the integer-exact vote buffer). */
+    * [[GroupTopK]]'s scaladoc warns about). Node ids must be
+    * long-typed (they double as labels inside the integer-exact vote
+    * buffer). */
   def labelPropagation(edges: DataFrame, iters: Int,
       aCol: String = "u1", bCol: String = "u2",
       checkpointEvery: Int = 1): DataFrame = {
@@ -401,43 +307,33 @@ object Graph {
       // isolated min-of-5 at sf0.1)
       .repartition(col("dst"))
       .cache()
-    var labels = und.select(col("src").as("node")).distinct()
+    val labels = und.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    var i = 1
-    while (i <= iters) {
-      val counts = und
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
+    // per-node (cnt DESC, label ASC) winner via the MajorityVote
+    // hash aggregate — see the class scaladoc for why not a window
+    // (hub straggler) and not min(struct) (SortAggregate fallback)
+    val mv = udaf(new MajorityVote)
+    Rounds.iterate(labels, iters, checkpointEvery) { labels =>
+      und.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      // per-node (cnt DESC, label ASC) winner via the MajorityVote
-      // hash aggregate — see the class scaladoc for why not a window
-      // (hub straggler) and not min(struct) (SortAggregate fallback)
-      val mv = udaf(new MajorityVote)
-      labels = counts
         .groupBy(col("node"))
         .agg(mv(col("cnt"), col("label")).as("label"))
-      if (i % checkpointEvery == 0)
-        labels = Rounds.shape(labels, col("node")).localCheckpoint(eager = true)
-      i += 1
     }
-    labels
   }
 
   /** Connected components over undirected edges — the graph module's
     * first-class face of the proven min-label/pointer-jumping loop in
     * [[Dedup.connectedComponents]] (same iteration, same O(log diameter)
-    * convergence and per-round localCheckpoint discipline; scale
-    * rationale there). Graph callers get (node, component) with
+    * convergence; scale rationale there). Graph callers get (node, component) with
     * component = the smallest reachable node id, without importing a
     * dedup module for a graph primitive. Nodes with no edges don't
     * appear (a graph is its edge set here); left-join the node universe
     * for singleton components, exactly as [[Dedup.canonical]] does. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      aCol: String = "u1", bCol: String = "u2",
-      roundPartitions: Option[Int] = None): DataFrame =
+      aCol: String = "u1", bCol: String = "u2"): DataFrame =
     Dedup.connectedComponents(
-        edges.select(col(aCol).as("d1"), col(bCol).as("d2")), maxIter,
-        roundPartitions)
+        edges.select(col(aCol).as("d1"), col(bCol).as("d2")), maxIter)
       .select(col("id").as("node"), col("component"))
 
   /** Modularity of a node partition (Newman & Girvan 2004 — the
@@ -488,31 +384,6 @@ object Graph {
           - pow(col("degree_sum") / lit(2.0 * m), 2), 6).as("q_term"))
   }
 
-  /** Per-(node, landmark) shortest distances from a seed set, by
-    * synchronous min-distance propagation (distributed BFS — the
-    * landmark/reachability feature builder: "how far is every user from
-    * each of these anchor accounts?"). Seeds not present in the graph
-    * are ignored (no edge can reach them); pairs beyond `maxHops` are
-    * absent rather than ∞, so the output is exactly the ≤ maxHops
-    * reachability relation.
-    *
-    * `directed = false` (default) walks an undirected view of the
-    * edges (canonicalized + symmetrized); `directed = true` propagates
-    * strictly along aCol→bCol. `weightCol = Some(w)` switches hop
-    * counting to MIN-SUM of edge weights (bounded-round Bellman-Ford:
-    * cheapest path using ≤ maxHops edges); duplicate (src, dst) edges
-    * collapse to their minimum weight, deterministically. Integral
-    * weights keep the sums exact cross-engine — fractional weights
-    * inherit the usual float-sum caveat (round before comparing).
-    *
-    * Scale shape per hop: one edge-keyed join (current distances →
-    * neighbors) and one (node, seed) min-aggregate, map-side combined;
-    * the distance frame is bounded by nodes × |seeds| — seeds are
-    * query-sized (landmarks), never corpus-sized. Distances only ever
-    * shrink, so the fixed `maxHops` rounds are deterministic and
-    * oracle-replayable (the [[pageRank]] convention); the frame
-    * materializes every round (consumed twice: the union and the
-    * propagation join — the 2^k recompute trap). */
   /** Shared weighted-adjacency prep for the BFS family: dedupe to min
     * weight per (src, dst), symmetrize unless directed, CACHE (the
     * iterative-access exception, as in pageRank — callers unpersist). */
@@ -537,6 +408,29 @@ object Graph {
       .cache()
   }
 
+  /** Per-(node, landmark) shortest distances from a seed set, by
+    * synchronous min-distance propagation (distributed BFS — the
+    * landmark/reachability feature builder: "how far is every user from
+    * each of these anchor accounts?"). Seeds not present in the graph
+    * are ignored (no edge can reach them); pairs beyond `maxHops` are
+    * absent rather than ∞, so the output is exactly the ≤ maxHops
+    * reachability relation.
+    *
+    * `directed = false` (default) walks an undirected view of the
+    * edges (canonicalized + symmetrized); `directed = true` propagates
+    * strictly along aCol→bCol. `weightCol = Some(w)` switches hop
+    * counting to MIN-SUM of edge weights (bounded-round Bellman-Ford:
+    * cheapest path using ≤ maxHops edges); duplicate (src, dst) edges
+    * collapse to their minimum weight, deterministically. Integral
+    * weights keep the sums exact cross-engine — fractional weights
+    * inherit the usual float-sum caveat (round before comparing).
+    *
+    * Scale shape per hop: one edge-keyed join (current distances →
+    * neighbors) and one (node, seed) min-aggregate, map-side combined;
+    * the distance frame is bounded by nodes × |seeds| — seeds are
+    * query-sized (landmarks), never corpus-sized. Distances only ever
+    * shrink, so the fixed `maxHops` rounds are deterministic and
+    * oracle-replayable (the [[pageRank]] convention). */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       aCol: String = "u1", bCol: String = "u2",
       directed: Boolean = false,
@@ -547,20 +441,17 @@ object Graph {
     // are still seedable/reachable, so the node set is src ∪ dst
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
-    var dist = nodes
+    val dist0 = nodes
       .join(broadcast(seeds.toDF("seed")), col("node") === col("seed"), "inner")
       .select(col("node"), col("seed"), lit(0L).as("dist"))
       .localCheckpoint(eager = true)
-    var h = 1
-    while (h <= maxHops) {
+    val dist = Rounds.iterate(dist0, maxHops) { dist =>
       val prop = dist
         .join(adj, dist("node") === adj("src"))
         .select(col("dst").as("node"), col("seed"), (col("dist") + col("w")).as("dist"))
-      dist = Rounds.shape(dist.union(prop)
+      dist.union(prop)
         .groupBy(col("node"), col("seed"))
-        .agg(min(col("dist")).as("dist")), col("node"))
-        .localCheckpoint(eager = true)
-      h += 1
+        .agg(min(col("dist")).as("dist"))
     }
     adj.unpersist()
     dist
@@ -618,23 +509,20 @@ object Graph {
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
     val lexmin = udaf(new LexMin2)
-    var dist = nodes
+    val dist0 = nodes
       .join(broadcast(seeds.toDF("seed")), col("node") === col("seed"), "inner")
       .select(col("node"), col("seed"), lit(0L).as("dist"), lit(-1L).as("pred"))
       .localCheckpoint(eager = true)
-    var h = 1
-    while (h <= maxHops) {
+    val dist = Rounds.iterate(dist0, maxHops) { dist =>
       val prop = dist
         .join(adj, dist("node") === adj("src"))
         .select(col("dst").as("node"), col("seed"),
           (col("dist") + col("w")).as("dist"), col("src").as("pred"))
-      dist = Rounds.shape(dist.union(prop)
+      dist.union(prop)
         .groupBy(col("node"), col("seed"))
         .agg(lexmin(col("dist"), col("pred")).as("dp"))
         .select(col("node"), col("seed"),
-          col("dp._1").as("dist"), col("dp._2").as("pred")), col("node"))
-        .localCheckpoint(eager = true)
-      h += 1
+          col("dp._1").as("dist"), col("dp._2").as("pred"))
     }
     adj.unpersist()
     dist
@@ -659,32 +547,32 @@ object Graph {
     *
     * Scale shape per round: two edge-keyed join+aggregate passes
     * (map-side combined, node-keyed — never all-pairs) and two 1-row
-    * max frames broadcast back; each half-step ends in an EAGER
-    * localCheckpoint (the [[pageRank]]/[[kCore]] round-lineage
-    * discipline), so plan size and recompute cost stay constant in
-    * `iters` and the returned frames are already materialized — the
-    * edge cache is then released in a finally without robbing callers
-    * of its benefit or leaking it on failure. Returns (hubs (u, h),
-    * authorities (i, a)) after `iters` full rounds. */
+    * max frames broadcast back; each half-step is one
+    * [[Rounds.iterate]] round, so the returned frames are already
+    * materialized — the edge cache is then released in a finally
+    * without robbing callers of its benefit or leaking it on failure.
+    * Returns (hubs (u, h), authorities (i, a)) after `iters` full
+    * rounds. */
   def hits(edges: DataFrame, uCol: String = "u", iCol: String = "i",
       iters: Int = 2): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = edges.select(col(uCol).as("u"), col(iCol).as("i"))
       .distinct().cache()
     try {
-      var hub = e.select(col("u")).distinct().withColumn("h", lit(1.0))
+      // rounds alternate half-steps: hub (u, h) → authority (i, a) → hub
       var auth: DataFrame = null
-      for (_ <- 1 to iters) {
-        val rawA = e.join(hub, "u").groupBy(col("i")).agg(sum(col("h")).as("ra"))
-        auth = Rounds.shape(rawA
-          .crossJoin(broadcast(rawA.agg(max(col("ra")).as("am"))))
-          .select(col("i"), round(col("ra") / col("am"), 6).as("a")), col("i"))
-          .localCheckpoint(eager = true)
-        val rawH = e.join(auth, "i").groupBy(col("u")).agg(sum(col("a")).as("rh"))
-        hub = Rounds.shape(rawH
-          .crossJoin(broadcast(rawH.agg(max(col("rh")).as("hm"))))
-          .select(col("u"), round(col("rh") / col("hm"), 6).as("h")), col("u"))
-          .localCheckpoint(eager = true)
+      val hub0 = e.select(col("u")).distinct().withColumn("h", lit(1.0))
+      val hub = Rounds.iterate(hub0, 2 * iters) { s =>
+        if (s.columns.head == "u") {
+          val rawA = e.join(s, "u").groupBy(col("i")).agg(sum(col("h")).as("ra"))
+          rawA.crossJoin(broadcast(rawA.agg(max(col("ra")).as("am"))))
+            .select(col("i"), round(col("ra") / col("am"), 6).as("a"))
+        } else {
+          auth = s
+          val rawH = e.join(auth, "i").groupBy(col("u")).agg(sum(col("a")).as("rh"))
+          rawH.crossJoin(broadcast(rawH.agg(max(col("rh")).as("hm"))))
+            .select(col("u"), round(col("rh") / col("hm"), 6).as("h"))
+        }
       }
       (hub, auth)
     } finally {
@@ -705,63 +593,33 @@ object Graph {
     * Fixed `maxRounds` (like [[pageRank]]'s fixed iterations) keeps the
     * result deterministic and oracle-replayable even when peeling
     * hasn't converged; synchronous rounds mean the result is
-    * partition-order-independent. Convergence detection would be the
-    * CC-loop count() — callers who need the true core pass maxRounds
-    * generous (peeling converges in O(diameter)-ish rounds in
-    * practice; every round strictly shrinks the node set or stops).
+    * partition-order-independent. Peeling is monotone — a round that
+    * removes no edge removes no node, so every later round is an
+    * identity — and the loop stops at the first such round
+    * ([[Rounds.NoneDropped]]); the output is the same as after all
+    * `maxRounds` peels (r22, measured on q144's graph at sf0.1: the peel
+    * converges after round 1, so rounds 2-4 were pure no-op jobs).
+    * Callers who need the true core pass maxRounds generous (peeling
+    * converges in O(diameter)-ish rounds in practice).
     *
     * Scale shape per round: one degree aggregate over the surviving
     * edge frame (map-side combined, node-keyed) and two semi-joins
     * filtering edges to surviving endpoints — all edge/node-sized,
-    * nothing corpus-wide on the driver; edges materialize per round
-    * (the same consumed-twice/lineage discipline as [[pageRank]]). */
+    * nothing corpus-wide on the driver. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int,
       aCol: String = "u1", bCol: String = "u2"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val spark = edges.sparkSession
-    // Early exit once a peel drops nothing (r22): peeling is monotone —
-    // a round that removes no edge removes no node, so every later
-    // round is an identity and the registered fixed `maxRounds` (the
-    // determinism contract) only bounds the loop; the OUTPUT of exiting
-    // early is bit-identical (measured on q144's graph at sf0.1: the
-    // peel converges after round 1, so rounds 2-4 were pure no-op
-    // jobs). The edge count is read off each round's own checkpoint
-    // materialization through a counted marker column — no extra job,
-    // the CC-fuse machinery. The marker column sits ABOVE the
-    // Rounds.shape exchange so it always evaluates in the RESULT stage
-    // of the checkpoint job, where accumulator updates are exactly-once
-    // — an equality test is only trustworthy without retry inflation
-    // (unlike the CC loop's zero-vs-positive test, which is safe in any
-    // stage position). `_rc` is materialized in the checkpointed blocks
-    // (8 bytes/row) and never escapes: every consumer projects (a, b).
-    def counted(df: DataFrame): (DataFrame, org.apache.spark.util.LongAccumulator) = {
-      val acc = spark.sparkContext.longAccumulator("graft.kcore.edges")
-      val m = udf(() => { acc.add(1L); 1L }).asNondeterministic()
-      (df.withColumn("_rc", m()).localCheckpoint(eager = true), acc)
-    }
-    var (e, acc0) = counted(
-      edges.select(col(aCol).as("a"), col(bCol).as("b"))
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct())
-    var prev = acc0.value
-    var r = 1
-    var converged = false
-    while (r <= maxRounds && !converged) {
+    val e0 = edges.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .distinct()
+    val e = Rounds.iterate(e0, maxRounds, until = Some(Rounds.NoneDropped)) { e =>
       val deg = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       val keep = deg.filter(col("degree") >= k).select(col("node"))
-      val (next, acc) = counted(Rounds.shape(e
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+      e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), col("a")))
-      // e is consumed twice next round (degree agg + both semi-joins
-      // share it) — the eager checkpoint inside counted() avoids the
-      // 2^k recompute nesting
-      e = next
-      if (acc.value == prev) converged = true else prev = acc.value
-      r += 1
+        .select(col("a"), col("b"))
     }
     // degrees of the subgraph as left after exactly maxRounds peels
     // (early exit only skips identity rounds) — no trailing filter, so

@@ -338,7 +338,7 @@ object MLQueries {
       }),
 
     // ---- edge-weighted PageRank over the mention graph, weight =
-    // interaction count (Graph.weightedPageRank — mass splits ∝ how
+    // interaction count (Graph.pageRank with weightCol — mass splits ∝ how
     // often the user mentioned the item, not uniformly across items
     // touched once): same three unrolled iterations as q134, with the
     // oracle's 1/deg contribution replaced by w/Σw. Where q134 asks
@@ -353,7 +353,7 @@ object MLQueries {
           concat(lit("u:"), col("user_id")).as("src"),
           concat(lit("i:"), col("item")).as("dst"),
           col("y").cast("double").as("weight"))
-        graft.ops.Graph.weightedPageRank(edges, iters = 3)
+        graft.ops.Graph.pageRank(edges, iters = 3, weightCol = Some("weight"))
           .select(col("node"), round(col("rank"), 6).as("rank"))
           .orderBy(col("node"))
       },
@@ -386,7 +386,7 @@ object MLQueries {
       }),
 
     // ---- personalized PageRank over the same mention graph
-    // (Graph.personalizedPageRank — topic-sensitive teleport to a seed
+    // (Graph.pageRank with seeds — topic-sensitive teleport to a seed
     // set, the "related to these users" ranking): seeds are users
     // {0, 1, 2} present in the graph (isin — literally the oracle's
     // IN ('u:0','u:1','u:2') set), teleport uniform over them,
@@ -404,7 +404,7 @@ object MLQueries {
           concat(lit("i:"), col("item")).as("dst"))
         val seeds = inter.filter(col("user_id").isin(0, 1, 2))
           .select(concat(lit("u:"), col("user_id")).as("node")).distinct()
-        graft.ops.Graph.personalizedPageRank(edges, iters = 3, seeds = seeds)
+        graft.ops.Graph.pageRank(edges, iters = 3, seeds = Some(seeds))
           .select(col("node"), round(col("rank"), 6).as("rank"))
           .orderBy(col("node"))
       },

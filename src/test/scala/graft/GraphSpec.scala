@@ -163,7 +163,7 @@ class GraphSpec extends SparkSpec {
     // seeded component carries all the mass
     val e = Seq(("a", "b"), ("b", "a"), ("c", "d"), ("d", "c")).toDF("src", "dst")
     val seeds = Seq("a").toDF("node")
-    val r = Graph.personalizedPageRank(e, iters = 4, seeds = seeds)
+    val r = Graph.pageRank(e, iters = 4, seeds = Some(seeds))
       .as[(String, Double)].collect().toMap
     assert(r("c") == 0.0 && r("d") == 0.0, r.toString)
     assert(math.abs(r.values.sum - 1.0) < 1e-12, s"mass drifted: ${r.values.sum}")
@@ -175,12 +175,12 @@ class GraphSpec extends SparkSpec {
     // a -> b, b dangling, seed {a}: tele = (1, 0); r0 = (1, 0); dsum = 0
     // a: .15*1 + .85*(0 + 0*1) = .15 ; b: .15*0 + .85*(1 + 0) = .85
     val e = Seq(("a", "b")).toDF("src", "dst")
-    val r = Graph.personalizedPageRank(e, iters = 1, seeds = Seq("a").toDF("node"))
+    val r = Graph.pageRank(e, iters = 1, seeds = Some(Seq("a").toDF("node")))
       .as[(String, Double)].collect().toMap
     assert(math.abs(r("a") - 0.15) < 1e-12, r.toString)
     assert(math.abs(r("b") - 0.85) < 1e-12, r.toString)
     // iteration 2: dsum = .85 (b dangles) -> a gets .15 + .85*.85*1
-    val r2 = Graph.personalizedPageRank(e, iters = 2, seeds = Seq("a").toDF("node"))
+    val r2 = Graph.pageRank(e, iters = 2, seeds = Some(Seq("a").toDF("node")))
       .as[(String, Double)].collect().toMap
     assert(math.abs(r2("a") - (0.15 + 0.85 * 0.85)) < 1e-12, r2.toString)
     assert(math.abs(r2("b") - 0.85 * 0.15) < 1e-12, r2.toString)
@@ -189,7 +189,8 @@ class GraphSpec extends SparkSpec {
   test("weightedPageRank: equal weights give the unweighted fixed point") {
     val e = Seq(("a", "b", 7.0), ("b", "c", 7.0), ("c", "a", 7.0))
       .toDF("src", "dst", "weight")
-    val r = Graph.weightedPageRank(e, iters = 3).as[(String, Double)].collect().toMap
+    val r = Graph.pageRank(e, iters = 3, weightCol = Some("weight"))
+      .as[(String, Double)].collect().toMap
     r.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12, r.toString))
   }
 
@@ -201,7 +202,8 @@ class GraphSpec extends SparkSpec {
       ("a", "b", 2.0), ("a", "b", 1.0), ("a", "c", 1.0),
       ("a", "c", 0.0), ("a", "b", -5.0)
     ).toDF("src", "dst", "weight")
-    val r = Graph.weightedPageRank(e, iters = 1).as[(String, Double)].collect().toMap
+    val r = Graph.pageRank(e, iters = 1, weightCol = Some("weight"))
+      .as[(String, Double)].collect().toMap
     val tele = 0.15 / 3
     assert(math.abs(r("a") - (tele + 0.85 * (2.0 / 9))) < 1e-12, r.toString)
     assert(math.abs(r("b") - (tele + 0.85 * (0.25 + 2.0 / 9))) < 1e-12, r.toString)
@@ -235,7 +237,7 @@ class GraphSpec extends SparkSpec {
   test("personalizedPageRank: seeds absent from the graph are rejected") {
     val e = Seq(("a", "b")).toDF("src", "dst")
     val ex = intercept[IllegalArgumentException] {
-      Graph.personalizedPageRank(e, iters = 1, seeds = Seq("zz").toDF("node"))
+      Graph.pageRank(e, iters = 1, seeds = Some(Seq("zz").toDF("node")))
     }
     assert(ex.getMessage.contains("seed"))
   }

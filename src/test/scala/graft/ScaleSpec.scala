@@ -651,45 +651,93 @@ class ScaleSpec extends SparkSpec {
     // exchange (~128 MB/partition of round state at scale). The knob
     // must (a) actually shape the materialized round state, (b) leave
     // the exact-long component labels bit-identical, (c) default to
-    // current behavior, (d) be settable session-wide via conf.
+    // current behavior, (d) reach every iterative loop through the one
+    // session conf.
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def withWidth[T](p: Int)(body: => T): T = {
+      spark.conf.set(ops.Rounds.PartitionsKey, p.toString)
+      try body finally spark.conf.unset(ops.Rounds.PartitionsKey)
+    }
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
       (21L, 22L), (22L, 23L), (5L, 3L)).toDF("d1", "d2")
     val default = ops.Dedup.connectedComponents(pairs)
-    val shaped = ops.Dedup.connectedComponents(pairs,
-      roundPartitions = Some(7))
-    // (a) the returned state is the last checkpointed round frame
-    assert(shaped.rdd.getNumPartitions == 7,
-      s"expected 7 round partitions, got ${shaped.rdd.getNumPartitions}")
     assert(default.rdd.getNumPartitions != 7)
-    // (b) identical labels
     val d = default.as[(Long, Long)].collect().toSet
-    assert(shaped.as[(Long, Long)].collect().toSet == d)
-    // (d) conf form reaches ops with no explicit argument
-    spark.conf.set(ops.Rounds.PartitionsKey, "5")
-    try {
-      val viaConf = ops.Dedup.connectedComponents(pairs)
-      assert(viaConf.rdd.getNumPartitions == 5)
-      assert(viaConf.as[(Long, Long)].collect().toSet == d)
-      // and the Graph iteratives' round state inherits it too
-      val bfs = ops.Graph.bfsDistances(
-        Seq((1L, 2L), (2L, 3L)).toDF("u1", "u2"), Seq(1L).toDF("seed"),
-        maxHops = 2)
-      assert(bfs.rdd.getNumPartitions == 5)
-    } finally spark.conf.unset(ops.Rounds.PartitionsKey)
+    withWidth(7) {
+      val shaped = ops.Dedup.connectedComponents(pairs)
+      // (a) the returned state is the last checkpointed round frame
+      assert(shaped.rdd.getNumPartitions == 7,
+        s"expected 7 round partitions, got ${shaped.rdd.getNumPartitions}")
+      // (b) identical labels
+      assert(shaped.as[(Long, Long)].collect().toSet == d)
+    }
+    // (d) all nine loops, PageRank in all three modes, over one small
+    // graph: a 4-clique (a non-empty 3-core) plus random edges
+    val rnd = new scala.util.Random(5)
+    val g = ((for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)) ++
+      (0 until 40).map(_ => (rnd.nextInt(16).toLong, rnd.nextInt(16).toLong))
+        .filter { case (a, b) => a != b }).toDF("u1", "u2")
+    val directed = g.select($"u1".as("src"), $"u2".as("dst"),
+      (($"u1" + $"u2") % 3 + 1).cast("double").as("weight"))
+    val seeds = Seq(1L, 7L).toDF("node")
+    // name -> (run, exact?); HITS contributes its two frames
+    val loops: Seq[(String, () => DataFrame, Boolean)] = Seq(
+      ("cc", () => ops.Dedup.connectedComponents(g.toDF("d1", "d2")), true),
+      ("graph cc", () => ops.Graph.connectedComponents(g), true),
+      ("lpa", () => ops.Graph.labelPropagation(g, iters = 3), true),
+      ("kcore", () => ops.Graph.kCore(g, k = 3, maxRounds = 3), true),
+      ("bfs", () => ops.Graph.bfsDistances(g, seeds, maxHops = 2), true),
+      ("spt", () => ops.Graph.shortestPathTree(g, seeds, maxHops = 2), true),
+      ("pagerank", () => ops.Graph.pageRank(directed, iters = 3), false),
+      ("weighted pagerank", () => ops.Graph.pageRank(directed, iters = 3,
+        weightCol = Some("weight")), false),
+      ("personalized pagerank", () => ops.Graph.pageRank(directed, iters = 3,
+        seeds = Some(seeds)), false),
+      ("hits hubs", () => ops.Graph.hits(g.toDF("u", "i"), iters = 2)._1, false),
+      ("hits authorities", () => ops.Graph.hits(g.toDF("u", "i"), iters = 2)._2, false))
+    // the widths of the checkpointed round states a frame reads
+    def stateWidths(df: DataFrame): Set[Int] =
+      df.queryExecution.optimizedPlan.collectLeaves().collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getNumPartitions
+      }.toSet
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    for ((name, run, exact) <- loops) {
+      val unset = rows(run())
+      withWidth(5) {
+        val out = run()
+        assert(stateWidths(out) == Set(5), s"$name: round state widths ${stateWidths(out)}")
+        // kCore returns a degree aggregate over its last state, sized
+        // by the aggregate; every other loop returns the state itself
+        if (name != "kcore")
+          assert(out.rdd.getNumPartitions == 5, s"$name: ${out.rdd.getNumPartitions}")
+        val got = rows(out)
+        assert(got.nonEmpty, name)
+        if (exact) assert(got == unset, s"$name: rows moved")
+        else {
+          assert(got.map(_.init) == unset.map(_.init), s"$name: keys moved")
+          got.zip(unset).foreach { case (a, b) =>
+            assert(math.abs(a.last.asInstanceOf[Double] - b.last.asInstanceOf[Double]) <= 1e-12,
+              s"$name: $a vs $b")
+          }
+        }
+      }
+    }
   }
 
   test("round-partitions knob: non-positive values throw, unset is silent (r20 ADVICE)") {
     import spark.implicits._
     val pairs = Seq((1L, 2L)).toDF("d1", "d2")
-    // explicit non-positive argument
-    intercept[IllegalArgumentException] {
-      ops.Dedup.connectedComponents(pairs, roundPartitions = Some(0))
-    }
-    // conf-set zero / negative: same error class as the non-numeric path
+    // conf-set zero / negative: same error class as the non-numeric
+    // path, at the op and at resolution
     spark.conf.set(ops.Rounds.PartitionsKey, "0")
-    try intercept[IllegalArgumentException] {
-      ops.Rounds.resolve(spark)
+    try {
+      intercept[IllegalArgumentException] {
+        ops.Dedup.connectedComponents(pairs)
+      }
+      intercept[IllegalArgumentException] {
+        ops.Rounds.resolve(spark)
+      }
     } finally spark.conf.unset(ops.Rounds.PartitionsKey)
     spark.conf.set(ops.Rounds.PartitionsKey, "-3")
     try intercept[IllegalArgumentException] {
